@@ -163,7 +163,10 @@ def connected_components(
 
     ``records`` needs a ``record_id`` column; ``edges`` needs id_a/id_b.
     Each iteration alternates large-star / small-star and checkpoints to
-    cut lineage; convergence = identical (count, hash) edge fingerprint.
+    cut lineage; the loop stops once the edge set is a star forest
+    (:func:`_converged_star_form`), the fixpoint of both passes. If
+    ``config.cc_max_iterations`` runs out first, it raises ``RuntimeError``
+    rather than emit labels that may not be component minima.
 
     ``id_codec='hex'``: ids are lowercase fixed-width hex digests (the
     pipeline's sha256 record ids) and the LOOP runs on their 32-byte
@@ -229,7 +232,7 @@ def connected_components(
         # — lazy blocks would be raced/duplicated there, re-running the
         # scoring lineage concurrently. The per-iteration checkpoints
         # below stay lazy because their materializing action is the
-        # single-scan fingerprint aggregate.
+        # star-form test, one aggregate job over a single scan.
         cur = cur.localCheckpoint(eager=True)
         n_iter = 0
         every = max(1, config.cc_fingerprint_every)
@@ -251,6 +254,14 @@ def connected_components(
             if n_iter % every == 0 or n_iter == config.cc_max_iterations:
                 if _converged_star_form(cur):
                     break
+        else:
+            # out of iterations before the fixpoint: the current labels
+            # need not be component minima, so fail instead of emitting them
+            raise RuntimeError(
+                "connected_components did not converge in "
+                f"{config.cc_max_iterations} iterations (cc_max_iterations); "
+                "the edge set is still not a star forest"
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 

@@ -4,6 +4,15 @@ Single place where execution knobs live so tests, bench.py and
 spark-submit entry points share the same tuned session:
 
 - AQE on (coalesce + skew-join) — runtime re-planning at 100 TB scale;
+- AQE also inside cached plans
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Without
+  it Spark plans every ``persist()``ed query — each stage of the
+  checkpoint-less pipeline — in a session clone with AQE off, so those
+  stages run at the fixed ``shuffle_partitions`` count with no coalescing
+  and no skew-join. Each Python-UDF task has a fixed start cost (Arrow
+  runner init, about 0.1-0.35 s on a 4-core host), so 32 mostly tiny
+  partitions of a feature or scoring stage cost seconds of pure overhead;
+  coalesced by bytes the same stage runs about one task per core;
 - Arrow enabled + bounded batch size (large `content` strings must not
   blow the Python worker, SURVEY.md §7.4.4);
 - shuffle partitions sized for the local harness; on a real cluster this
@@ -34,6 +43,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

@@ -138,3 +138,20 @@ def test_cc_stops_at_true_fixpoint_iteration(spark):
     }
     n_iter = out.select("n_iter").first()["n_iter"]
     assert n_iter <= 3  # fingerprint-equality needed an extra confirm round
+
+
+def test_unconverged_cc_raises(spark):
+    """Running out of cc_max_iterations before the star-form fixpoint must
+    raise, naming the iteration count — never return labels that may not
+    be component minima. The default budget converges on the same path."""
+    import pytest
+
+    nodes = [f"n{i:02d}" for i in range(32)]
+    e = spark.createDataFrame(
+        [(nodes[i], nodes[i + 1]) for i in range(31)], ["id_a", "id_b"]
+    )
+    n = spark.createDataFrame([(x,) for x in nodes], ["record_id"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
+        connected_components(e, n, PipelineConfig(cc_max_iterations=1))
+    out = connected_components(e, n, PipelineConfig())
+    assert {r["cluster_id"] for r in out.collect()} == {"n00"}

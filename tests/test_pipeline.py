@@ -309,3 +309,17 @@ def test_validate_unique_ids_catches_cross_content_duplicates(spark, tiny_files)
     ).unionAll(forged)
     with pytest.raises(ValueError, match="duplicate record_id"):
         P.run_pipeline(dup, PipelineConfig(validate_unique_ids=True))
+
+
+def test_light_stage_caches_are_planned_adaptively(spark, tiny_files):
+    """The checkpoint-less pipeline persists every stage; the cached plans
+    must run under AQE so a tiny stage is coalesced below the fixed
+    shuffle-partition count instead of paying one Python task per
+    partition."""
+    res = P.run_pipeline(tiny_files, PipelineConfig(), light=True)
+    try:
+        feats = res.persisted[[m["stage"] for m in res.metrics].index("features")]
+        n_parts = feats.rdd.getNumPartitions()
+        assert n_parts < int(spark.conf.get("spark.sql.shuffle.partitions")), n_parts
+    finally:
+        res.unpersist_all()
